@@ -20,13 +20,17 @@ Design (SURVEY.md §2.11, §4):
   ok | empty | bad_password | error, with the exception recorded —
   STRICT=False semantics, lifted to the pipeline level (reference
   pdfminer.six settings.py:1, permissive coercers pdftypes.py:148-218).
+* Every path runs the one row kernel ``_extract_one`` (payload decode and
+  the exception -> status mapping), timed per call: ``wall_ms`` is the
+  turn's own kernel milliseconds — summed over its page groups on the
+  split path, per distinct payload on the dedup path.
 """
 
 from __future__ import annotations
 
 import base64
 import time
-from typing import Iterator, List, Optional
+from typing import Iterator, Optional
 
 import pandas as pd
 
@@ -63,6 +67,8 @@ EXTRACTED_SCHEMA = StructType(
         StructField("n_chars", IntegerType()),
         StructField("status", StringType()),
         StructField("error", StringType()),
+        # the turn's own kernel milliseconds (split path: summed over its
+        # page groups; dedup path: the distinct payload's)
         StructField("wall_ms", DoubleType()),
         # character-span offsets (north rule): [start, end) into `text`
         # per page (PDF turns; pages end at \f) or one whole-text span
@@ -158,7 +164,7 @@ _B85_DEC_LUT = None
 
 
 def _b85decode_fast(s: str) -> bytes:
-    """Vectorized ``base64.b85decode`` for the per-turn payload decode —
+    """Vectorized ``base64.b85decode`` for every payload decode here —
     stdlib's pure-Python 5-char loop was ~10% of ``_extract_one`` in the
     kernel profile (each PDF payload is tens of KB of base85).  Identical
     semantics: same alphabet LUT, '~'-padding to a 5-multiple, stripped
@@ -198,8 +204,12 @@ def _b85decode_fast(s: str) -> bytes:
     return out[: len(out) - pad] if pad else out
 
 
-def _extract_one(tool: str, text: str, password: str) -> tuple:
-    """(text, n_pages, status, error) for one turn payload."""
+def _extract_one(
+    tool: str, text: str, password: str, page_numbers=None
+) -> tuple:
+    """(text, n_pages, status, error) for one turn payload; the only place
+    that decodes payloads and maps an exception to a status.
+    ``page_numbers`` (0-based) restricts a PDF turn to a page group."""
     from pdfminer_six_spark.core.crypto import EncryptionError
     from pdfminer_six_spark.core.extract import extract_text
     from pdfminer_six_spark.core.html import extract_main_text
@@ -210,7 +220,9 @@ def _extract_one(tool: str, text: str, password: str) -> tuple:
         except ValueError as e:
             return ("", 0, "error", f"b85decode: {e}")
         try:
-            out = extract_text(payload, password=password)
+            out = extract_text(
+                payload, password=password, page_numbers=page_numbers
+            )
             return (out, out.count("\f"), "ok" if out else "empty", "")
         except EncryptionError as e:
             return ("", 0, "bad_password", str(e))
@@ -226,6 +238,46 @@ def _extract_one(tool: str, text: str, password: str) -> tuple:
     return (text, 0, "ok", "")
 
 
+def _extract_timed(
+    tool: str, text: str, password: str, page_numbers=None
+) -> tuple:
+    """``_extract_one``'s row plus the call's own wall time in ms."""
+    t0 = time.perf_counter()
+    row = _extract_one(tool, text, password, page_numbers)
+    return row + ((time.perf_counter() - t0) * 1000.0,)
+
+
+def _extracted_frame(conv_ids, turn_idxs, rows) -> pd.DataFrame:
+    """An ``EXTRACTED_SCHEMA`` frame from timed kernel rows
+    (text, n_pages, status, error, wall_ms), one per key."""
+    texts, pages, statuses, errors, walls = (
+        [list(c) for c in zip(*rows)] if rows else [[] for _ in range(5)]
+    )
+    return pd.DataFrame(
+        {
+            "conv_id": pd.Series(list(conv_ids), dtype="object"),
+            "turn_idx": pd.Series(list(turn_idxs), dtype="int32"),
+            "text": pd.Series(texts, dtype="object"),
+            "n_pages": pd.Series(pages, dtype="int32"),
+            "n_chars": pd.Series([len(t) for t in texts], dtype="int32"),
+            "status": pd.Series(statuses, dtype="object"),
+            "error": pd.Series(errors, dtype="object"),
+            "wall_ms": pd.Series(walls, dtype="float64"),
+            "spans": pd.Series(
+                [_char_spans(t, p) for t, p in zip(texts, pages)],
+                dtype="object",
+            ),
+        }
+    )
+
+
+def _sorted_turns(out: DataFrame) -> DataFrame:
+    """Stable (conv_id, turn_idx) ordering for the sink."""
+    return out.repartitionByRange("conv_id", "turn_idx").sortWithinPartitions(
+        "conv_id", "turn_idx"
+    )
+
+
 def extract_transcripts(
     df: DataFrame,
     password: str = "",
@@ -236,39 +288,14 @@ def extract_transcripts(
     (unless rebalancing/sorting is requested)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            t0 = time.perf_counter()
-            texts: List[str] = []
-            pages: List[int] = []
-            statuses: List[str] = []
-            errors: List[str] = []
-            for tool, text in zip(pdf_batch["tool"], pdf_batch["text"]):
-                out, np_, st, err = _extract_one(tool or "", text or "", password)
-                texts.append(out)
-                pages.append(np_)
-                statuses.append(st)
-                errors.append(err)
-            wall = (time.perf_counter() - t0) * 1000.0 / max(len(texts), 1)
-            yield pd.DataFrame(
-                {
-                    "conv_id": pdf_batch["conv_id"],
-                    "turn_idx": pdf_batch["turn_idx"].astype("int32"),
-                    "text": pd.Series(texts, index=pdf_batch.index, dtype="object"),
-                    "n_pages": pd.Series(pages, index=pdf_batch.index, dtype="int32"),
-                    "n_chars": pd.Series(
-                        [len(t) for t in texts], index=pdf_batch.index, dtype="int32"
-                    ),
-                    "status": pd.Series(statuses, index=pdf_batch.index),
-                    "error": pd.Series(errors, index=pdf_batch.index),
-                    "wall_ms": pd.Series(
-                        [wall] * len(texts), index=pdf_batch.index, dtype="float64"
-                    ),
-                    "spans": pd.Series(
-                        [_char_spans(t, p) for t, p in zip(texts, pages)],
-                        index=pdf_batch.index,
-                        dtype="object",
-                    ),
-                }
+        for b in batches:
+            yield _extracted_frame(
+                b["conv_id"],
+                b["turn_idx"],
+                [
+                    _extract_timed(tool or "", text or "", password)
+                    for tool, text in zip(b["tool"], b["text"])
+                ],
             )
 
     src = df.select("conv_id", "turn_idx", "text", "tool")
@@ -276,12 +303,7 @@ def extract_transcripts(
         # round-robin: uniform work distribution without a keyed shuffle
         src = src.repartition(rebalance_partitions)
     out = src.mapInPandas(run, schema=EXTRACTED_SCHEMA)
-    if sort_output:
-        # stable turn ordering invariant for the sink
-        out = out.repartitionByRange("conv_id", "turn_idx").sortWithinPartitions(
-            "conv_id", "turn_idx"
-        )
-    return out
+    return _sorted_turns(out) if sort_output else out
 
 
 def extract_transcripts_dedup(
@@ -341,11 +363,7 @@ def extract_transcripts_dedup(
         "text", "n_pages", "n_chars", "status",
         "error", "wall_ms", "spans",
     )
-    if sort_output:
-        out = out.repartitionByRange("conv_id", "turn_idx").sortWithinPartitions(
-            "conv_id", "turn_idx"
-        )
-    return out
+    return _sorted_turns(out) if sort_output else out
 
 
 # --- page-split extraction (intra-payload parallelism) ---------------------
@@ -357,20 +375,21 @@ def extract_transcripts_dedup(
 # then explodes to ceil(n_pages / pages_per_group) rows, each carrying the
 # payload bytes once per GROUP (shuffle volume = payload_bytes x n_groups —
 # pages_per_group is the dial between skew cap and replication); pass 2
-# extracts each page range independently (extract_text(page_numbers=...));
-# reassembly concatenates group texts in page order.  Page texts are
-# \f-terminated by the text sink, so the concatenation is byte-identical to
-# the unsplit output (differentially tested) — the distributed version of
-# the reference's per-page lazy iteration (high_level.py:190-227).
+# runs the row kernel on each page range independently
+# (_extract_one(page_numbers=...)); reassembly concatenates group texts in
+# page order.  Page texts are \f-terminated by the text sink, so the
+# concatenation is byte-identical to the unsplit output (differentially
+# tested) — the distributed version of the reference's per-page lazy
+# iteration (high_level.py:190-227).  A payload pass 1 cannot count
+# (n_pages = 0) becomes ONE group over all its pages, i.e. exactly the
+# unsplit kernel call, so it fails with the unsplit status and error.
 
 _PAGED_COUNTED_SCHEMA = StructType(
     [
         StructField("conv_id", StringType()),
         StructField("turn_idx", IntegerType()),
         StructField("text", StringType()),
-        StructField("n_pages", IntegerType()),
-        StructField("status", StringType()),  # '' = splittable, else terminal
-        StructField("error", StringType()),
+        StructField("n_pages", IntegerType()),  # 0 = could not count
     ]
 )
 
@@ -387,50 +406,17 @@ _PAGED_PARTIAL_SCHEMA = StructType(
 )
 
 
-def _count_pages_run(password: str):
-    """Pass-1 kernel: (conv_id, turn_idx, text[b85 pdf]) -> page count, or a
-    terminal status for payloads the unsplit kernel would also fail on
-    (b85 errors, bad passwords, unreadable page trees)."""
+def _count_pages(text: str, password: str) -> int:
+    """Pass-1 kernel: the page count of a b85 PDF payload (xref + page-tree
+    DFS, no content interpretation), or 0 when it cannot be counted; the
+    pass-2 kernel call then records why."""
+    from pdfminer_six_spark.core.document import Document, iter_pages
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdfminer_six_spark.core.crypto import EncryptionError
-        from pdfminer_six_spark.core.document import Document, iter_pages
-
-        for b in batches:
-            rows = []
-            for conv_id, turn_idx, text in zip(
-                b["conv_id"], b["turn_idx"], b["text"]
-            ):
-                try:
-                    payload = base64.b85decode(text or "")
-                except ValueError as e:
-                    rows.append(
-                        (conv_id, turn_idx, "", 0, "error", f"b85decode: {e}")
-                    )
-                    continue
-                try:
-                    doc = Document(payload, password=password)
-                    n = sum(1 for _ in iter_pages(doc))
-                except EncryptionError as e:
-                    rows.append((conv_id, turn_idx, "", 0, "bad_password", str(e)))
-                    continue
-                except Exception as e:
-                    # NOTE: a doc that is BOTH tree-corrupt and
-                    # content-corrupt surfaces the tree error here, while
-                    # the unsplit kernel may hit an earlier content error
-                    # first — extracted text is '' either way; only the
-                    # error string can differ on that double-corrupt case
-                    rows.append(
-                        (conv_id, turn_idx, "", 0, "error",
-                         f"{type(e).__name__}: {e}")
-                    )
-                    continue
-                rows.append((conv_id, turn_idx, text, max(n, 1), "", ""))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _PAGED_COUNTED_SCHEMA.fields]
-            ).astype({"turn_idx": "int32", "n_pages": "int32"})
-
-    return run
+    try:
+        doc = Document(_b85decode_fast(text), password=password)
+        return sum(1 for _ in iter_pages(doc))
+    except Exception:
+        return 0
 
 
 def page_groups(
@@ -438,18 +424,14 @@ def page_groups(
     pages_per_group: int = 8,
     num_partitions: Optional[int] = None,
 ) -> DataFrame:
-    """Explode pass-1 rows to one row per page group and spread the groups
-    across tasks (hash on (conv_id, turn_idx, grp) — the whole point: two
-    groups of the same document land on different tasks).  Factored out so
-    tests can assert the spread directly."""
+    """Explode pass-1 rows to one row per page group (at least one) and
+    spread the groups across tasks (hash on (conv_id, turn_idx, grp) — the
+    whole point: two groups of the same document land on different tasks).
+    Factored out so tests can assert the spread directly."""
+    n_groups = F.ceil(F.col("n_pages") / F.lit(pages_per_group)).cast("int")
     g = counted.withColumn(
         "grp",
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.ceil(F.col("n_pages") / F.lit(pages_per_group)).cast("int") - 1,
-            )
-        ),
+        F.explode(F.sequence(F.lit(0), F.greatest(n_groups - 1, F.lit(0)))),
     )
     return g.repartition(
         num_partitions or counted.sparkSession.sparkContext.defaultParallelism,
@@ -472,69 +454,44 @@ def extract_transcripts_split_pages(
     row-local kernel.  Output is byte-identical to extract_transcripts
     modulo wall_ms (per-group costs are summed) — differentially tested.
     """
-    src = df.select("conv_id", "turn_idx", "text", "tool")
-    is_big = (F.col("tool") == F.lit("pdf")) & (
-        F.length("text") >= F.lit(split_chars)
+    is_big = F.coalesce(
+        (F.col("tool") == F.lit("pdf"))
+        & (F.length("text") >= F.lit(split_chars)),
+        F.lit(False),
     )
     small_out = extract_transcripts(
-        df.filter(~F.coalesce(is_big, F.lit(False))),
+        df.filter(~is_big),
         password=password,
         rebalance_partitions=rebalance_partitions,
     )
-    big = src.filter(F.coalesce(is_big, F.lit(False)))
 
-    # persist: `counted` feeds BOTH union branches (terminal rows + the
-    # page-group explode); without it the expensive pass-1 kernel (b85
-    # decode + xref + page-tree DFS of every oversized payload) runs
-    # twice per action (accumulator-measured 2x).  No explicit unpersist:
-    # the return is lazy — the caller's first action populates the cache,
-    # and the blocks are LRU-evicted / released with the job
-    counted = big.mapInPandas(
-        _count_pages_run(password), schema=_PAGED_COUNTED_SCHEMA
-    ).persist()
-    # pass-1 terminal failures: same row shape the unsplit kernel emits
-    empty_spans = F.array().cast(EXTRACTED_SCHEMA["spans"].dataType)
-    direct = counted.filter(F.col("status") != "").select(
-        "conv_id", "turn_idx",
-        F.lit("").alias("text"),
-        F.lit(0).cast("int").alias("n_pages"),
-        F.lit(0).cast("int").alias("n_chars"),
-        "status", "error",
-        F.lit(0.0).alias("wall_ms"),
-        empty_spans.alias("spans"),
-    )
+    def count_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            yield b.assign(
+                n_pages=[_count_pages(t, password) for t in b["text"]]
+            ).astype({"turn_idx": "int32", "n_pages": "int32"})
 
-    groups = page_groups(
-        counted.filter(F.col("status") == ""), pages_per_group,
-        rebalance_partitions,
+    counted = (
+        df.filter(is_big)
+        .select("conv_id", "turn_idx", "text")
+        .mapInPandas(count_pages, schema=_PAGED_COUNTED_SCHEMA)
     )
+    groups = page_groups(counted, pages_per_group, rebalance_partitions)
 
     def extract_group(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdfminer_six_spark.core.extract import extract_text
-
         for b in batches:
             rows = []
-            for conv_id, turn_idx, text, grp in zip(
-                b["conv_id"], b["turn_idx"], b["text"], b["grp"]
-            ):
-                t0 = time.perf_counter()
-                payload = base64.b85decode(text)  # pass 1 proved decodable
-                pages = range(
-                    int(grp) * pages_per_group, (int(grp) + 1) * pages_per_group
-                )
-                try:
-                    out = extract_text(
-                        payload, password=password, page_numbers=set(pages)
-                    )
-                    st, err = "ok", ""
-                except Exception as e:
-                    out, st, err = "", "error", f"{type(e).__name__}: {e}"
-                rows.append(
-                    (conv_id, turn_idx, int(grp), out, st, err,
-                     (time.perf_counter() - t0) * 1000.0)
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _PAGED_PARTIAL_SCHEMA.fields]
+            for text, n_pages, grp in zip(b["text"], b["n_pages"], b["grp"]):
+                first = int(grp) * pages_per_group
+                # n_pages = 0 (uncounted): the one group is the unsplit call
+                pages = range(first, first + pages_per_group) if n_pages else None
+                rows.append(_extract_timed("pdf", text, password, pages))
+            rows = pd.DataFrame(
+                rows, columns=["text", "n_pages", "status", "error", "wall_ms"]
+            )
+            keys = b[["conv_id", "turn_idx", "grp"]].reset_index(drop=True)
+            yield pd.concat(
+                [keys, rows.drop(columns="n_pages")], axis=1
             ).astype({"turn_idx": "int32", "grp": "int32"})
 
     partials = groups.mapInPandas(extract_group, schema=_PAGED_PARTIAL_SCHEMA)
@@ -543,43 +500,24 @@ def extract_transcripts_split_pages(
         # one group key = one document's page-group partials (small by
         # construction: n_pages / pages_per_group rows)
         pdf = pdf.sort_values("grp")
-        conv_id = pdf["conv_id"].iloc[0]
-        turn_idx = pdf["turn_idx"].iloc[0]
-        errs = pdf[pdf["status"] == "error"]
-        if len(errs):
-            # the unsplit kernel fails the WHOLE doc on the first page
-            # error — reproduce that contract (lowest-group error wins)
-            text, n_pages, status, error = "", 0, "error", errs["error"].iloc[0]
+        wall = float(pdf["wall_ms"].sum())
+        failed = pdf[~pdf["status"].isin(["ok", "empty"])]
+        if len(failed):
+            # the unsplit kernel fails the WHOLE doc on its first failing
+            # page — reproduce that contract (lowest failing group wins)
+            row = ("", 0, failed["status"].iloc[0], failed["error"].iloc[0], wall)
         else:
             text = "".join(pdf["text"])
-            n_pages = text.count("\f")
-            status = "ok" if text else "empty"
-            error = ""
-        return pd.DataFrame(
-            {
-                "conv_id": [conv_id],
-                "turn_idx": pd.Series([turn_idx], dtype="int32"),
-                "text": [text],
-                "n_pages": pd.Series([n_pages], dtype="int32"),
-                "n_chars": pd.Series([len(text)], dtype="int32"),
-                "status": [status],
-                "error": [error],
-                "wall_ms": pd.Series([float(pdf["wall_ms"].sum())],
-                                     dtype="float64"),
-                "spans": pd.Series([_char_spans(text, n_pages)], dtype="object"),
-            }
+            row = (text, text.count("\f"), "ok" if text else "empty", "", wall)
+        return _extracted_frame(
+            pdf["conv_id"].iloc[:1], pdf["turn_idx"].iloc[:1], [row]
         )
 
     assembled = partials.groupBy("conv_id", "turn_idx").applyInPandas(
         reassemble, EXTRACTED_SCHEMA
     )
-
-    out = small_out.unionByName(assembled).unionByName(direct)
-    if sort_output:
-        out = out.repartitionByRange("conv_id", "turn_idx").sortWithinPartitions(
-            "conv_id", "turn_idx"
-        )
-    return out
+    out = small_out.unionByName(assembled)
+    return _sorted_turns(out) if sort_output else out
 
 
 LAYOUT_UNION_SCHEMA = StructType(
@@ -624,9 +562,7 @@ def extract_layout_tables(
     """
 
     def run_union(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdfminer_six_spark.core.device import LayoutDevice
-        from pdfminer_six_spark.core.document import get_pages
-        from pdfminer_six_spark.core.interp import Interpreter, ResourceManager
+        from pdfminer_six_spark.core.extract import extract_pages
         from pdfminer_six_spark.core.layout import (
             LAParams,
             LTChar,
@@ -646,20 +582,13 @@ def extract_layout_tables(
                 if tool != "pdf":
                     continue
                 try:
-                    payload = base64.b85decode(text)
-                except Exception:
-                    continue
-                rsrcmgr = ResourceManager()
-                try:
-                    pages = []
-                    for pageno, page in enumerate(
-                        get_pages(payload, password=password), 1
-                    ):
-                        # laparams=None: raw tree, chars in content-stream
-                        # emission order
-                        device = LayoutDevice(laparams=None, pageno=pageno)
-                        Interpreter(rsrcmgr, device).process_page(page)
-                        pages.append(device.get_result())
+                    # laparams=None: raw trees, chars in content-stream
+                    # emission order
+                    pages = list(
+                        extract_pages(
+                            _b85decode_fast(text), password, laparams=None
+                        )
+                    )
                 except Exception:
                     continue
                 ti = int(turn_idx)

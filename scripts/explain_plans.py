@@ -3,7 +3,11 @@
 plan-quality audit trail (predicate pushdown, column pruning, broadcast
 joins, whole-stage codegen spans).
 
-Usage: python scripts/explain_plans.py [sf_dir] > PLANS.txt
+Usage: python scripts/explain_plans.py [sf_dir] [query ...] > PLANS.txt
+
+Queries default to the headline list below.  Each plan is followed by a
+``<query>: Exchange=N python=M`` line counting its shuffle and python
+(EvalPython / MapInPandas) operators.
 """
 
 from __future__ import annotations
@@ -20,7 +24,7 @@ def main() -> None:
     from pdfminer_six_spark.spark.session import build_session
 
     spark = build_session(app_name="explain", master="local[4]")
-    names = [
+    names = sys.argv[2:] or [
         "filter_project",
         "pricing_summary",
         "join_revenue_by_nation",
@@ -48,13 +52,14 @@ def main() -> None:
         fn, _ = QUERIES[name]
         print(f"{'=' * 70}\n== {name}\n{'=' * 70}")
         df = fn(spark, sf_dir)
-        print(df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        ) if False else df._jdf.queryExecution().explainString(
+        plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"
             )
-        ))
+        )
+        n_py = plan.count("EvalPython") + plan.count("MapInPandas")
+        print(plan)
+        print(f"{name}: Exchange={plan.count('Exchange')} python={n_py}")
     spark.stop()
 
 

@@ -231,8 +231,9 @@ def test_split_pages_equals_unsplit_and_spreads_tasks(spark):
     """--split-pages semantics: a pathological 120-page payload is
     extracted in page groups across MULTIPLE tasks with byte-identical
     output to the unsplit path (pages are \\f-framed, so group
-    concatenation is exact).  Also covers the pass-1 terminal rows
-    (undecodable oversized payload)."""
+    concatenation is exact).  Also covers oversized payloads pass 1
+    cannot count (undecodable; page-tree-corrupt by truncation), no cache
+    left behind by a split action, and a per-turn ``wall_ms``."""
     import base64
 
     import pandas as pd
@@ -255,14 +256,16 @@ def test_split_pages_equals_unsplit_and_spreads_tasks(spark):
         [[f"page {i} line {j}" for j in range(3)] for i in range(120)]
     )
     big_text = base64.b85encode(big_pdf).decode()
+    trunc_text = base64.b85encode(big_pdf[: len(big_pdf) * 3 // 4]).decode()
     extra = pd.DataFrame(
         {
-            "conv_id": ["conv_big", "conv_junk"],
-            "turn_idx": [0, 0],
-            "role": ["tool", "tool"],
-            "text": [big_text, "~" * len(big_text)],  # junk: b85-invalid
-            "tool": ["pdf", "pdf"],
-            "ts": [p["ts"].iloc[0]] * 2,
+            "conv_id": ["conv_big", "conv_junk", "conv_trunc"],
+            "turn_idx": [0, 0, 0],
+            "role": ["tool", "tool", "tool"],
+            # junk: b85-invalid; trunc: no xref/trailer/catalog
+            "text": [big_text, "~" * len(big_text), trunc_text],
+            "tool": ["pdf", "pdf", "pdf"],
+            "ts": [p["ts"].iloc[0]] * 3,
         }
     )
     df = spark.createDataFrame(
@@ -282,14 +285,29 @@ def test_split_pages_equals_unsplit_and_spreads_tasks(spark):
         )
         .withColumn("spans", F.to_json("spans")).select(cols)
     )
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    # a split action leaves no cached relation behind
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
     big_row = b.filter(F.col("conv_id") == "conv_big").collect()[0]
     assert big_row.status == "ok" and big_row.n_pages == 120
     junk_row = b.filter(F.col("conv_id") == "conv_junk").collect()[0]
     assert junk_row.status == "error" and "b85decode" in junk_row.error
+    trunc_row = b.filter(F.col("conv_id") == "conv_trunc").collect()[0]
+    assert trunc_row.status == "error" and trunc_row.text == ""
+    # wall_ms is each turn's own kernel time, not a batch mean: in ONE
+    # batch, identity (plain) turns cost less than the 120-page PDF turn
+    walls = (
+        extract_transcripts(df.coalesce(1))
+        .join(df.select("conv_id", "turn_idx", "tool"), ["conv_id", "turn_idx"])
+        .collect()
+    )
+    big_wall = next(r.wall_ms for r in walls if r.conv_id == "conv_big")
+    plain = [r.wall_ms for r in walls if r.tool not in ("pdf", "html")]
+    assert plain and max(plain) < big_wall
     # the 120-page payload's 15 page groups occupy MULTIPLE tasks
     counted = spark.createDataFrame(
-        [("conv_big", 0, big_text, 120, "", "")], schema=_PAGED_COUNTED_SCHEMA
+        [("conv_big", 0, big_text, 120)], schema=_PAGED_COUNTED_SCHEMA
     )
     parts = (
         page_groups(counted, pages_per_group=8, num_partitions=8)
