@@ -56,6 +56,7 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from pdfminer_six_spark.spark.session import cache_scope  # noqa: E402
 
 STAGES = ("extract", "clean", "dedup", "score", "mix", "pack")
 
@@ -124,7 +125,8 @@ class _Build:
             self.stats[name] = {"action": "skipped"}
             return self.spark.read.parquet(path)
         t0 = time.perf_counter()
-        build_fn().write.mode("overwrite").parquet(path)
+        with cache_scope():
+            build_fn().write.mode("overwrite").parquet(path)
         wall = time.perf_counter() - t0
         out = self.spark.read.parquet(path)
         n = out.count()
@@ -142,6 +144,7 @@ class _Build:
         return out
 
 
+@cache_scope()
 def run(spark, args) -> dict:
     from pyspark.sql import functions as F
 

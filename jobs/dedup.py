@@ -29,6 +29,7 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from pdfminer_six_spark.spark.session import cache_scope  # noqa: E402
 
 
 def build_args(argv=None):
@@ -80,6 +81,7 @@ def build_args(argv=None):
     return p.parse_args(argv)
 
 
+@cache_scope()
 def run(spark, args) -> dict:
     from pyspark.sql import functions as F
 

@@ -122,6 +122,7 @@ def run(spark, args, ap=None) -> None:
         lineage_metrics,
         resume_filter,
     )
+    from pdfminer_six_spark.spark.session import cache_scope, cached
 
     dedup_payloads = getattr(args, "dedup_payloads", False)
     split_pages = getattr(args, "split_pages", 0)
@@ -202,10 +203,10 @@ def run(spark, args, ap=None) -> None:
         sort_output=args.sorted_output,
     )
     if args.lineage:
-        extracted = extracted.persist()
-        _write_out(extracted, args.output, args.tables)
-        _write_out(lineage_metrics(extracted), args.lineage, args.tables)
-        extracted.unpersist()
+        with cache_scope():
+            extracted = cached(extracted)
+            _write_out(extracted, args.output, args.tables)
+            _write_out(lineage_metrics(extracted), args.lineage, args.tables)
     else:
         _write_out(extracted, args.output, args.tables)
 

@@ -33,6 +33,7 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from pdfminer_six_spark.spark.session import cache_scope  # noqa: E402
 
 
 def build_args(argv=None):
@@ -77,6 +78,7 @@ def build_args(argv=None):
     return p.parse_args(argv)
 
 
+@cache_scope()
 def run(spark, args) -> dict:
     from pyspark.sql import functions as F
 
@@ -106,22 +108,14 @@ def run(spark, args) -> dict:
         model = (
             spark.read.parquet(args.lm_model) if args.lm_model else None
         )
-        lm_model_handle = []
-        lm = ngram_lm_scores(docs, model=model, model_handle=lm_model_handle)
+        lm = ngram_lm_scores(docs, model=model)
         # left join: <2-token docs have no LM score (NULL), they already
         # fail the Gopher token floor so the verdict is unaffected
         enriched = enriched.join(
             lm.select("doc_id", "avg_nll", "ppl"), "doc_id", "left"
         )
-    else:
-        lm_model_handle = []
     out = enriched.filter("keep_doc") if args.keep_only else enriched
     out.write.mode("overwrite").parquet(args.output)
-    # the scoring action has run: release the cached inline LM model so a
-    # long-lived session scoring many inputs doesn't accumulate cache
-    # entries (one per distinct input plan)
-    for cached in lm_model_handle:
-        cached.unpersist()
 
     if args.report_output:
         from pdfminer_six_spark.ops.textstats import corpus_report

@@ -464,6 +464,8 @@ class Type3Font(SimpleFont):
         self.matrix = tuple(list_value(spec.get("FontMatrix", (1, 0, 0, 1, 0, 0))))
         (_, self.descent, _, self.ascent) = self.bbox
         (self.hscale, self.vscale) = _matrix_norm(self.matrix, (1, 1))
+        # _wcache widths are hscale-scaled; drop any made under the old scale
+        self._wcache.clear()
 
 
 def _matrix_norm(m, pt):

@@ -20,6 +20,8 @@ from typing import Sequence, Tuple
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from pdfminer_six_spark.spark.session import cached
+
 __all__ = [
     "PII_PATTERNS",
     "redact_pii",
@@ -717,10 +719,9 @@ def train_order(
         ordered = keyed.select(id_col, pos)
     elif mode == "sharded":
         n_parts = max(keyed.sparkSession.sparkContext.defaultParallelism, 2)
-        parts = (
+        parts = cached(
             keyed.repartitionByRange(n_parts, "_k", id_col)
             .withColumn("_pid", F.spark_partition_id())
-            .persist()
         )
         counts = {
             r["_pid"]: r["c"]

@@ -16,6 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from pdfminer_six_spark.ops.textstats import normalized_text, tokens_col
+from pdfminer_six_spark.spark.session import cached
 
 __all__ = [
     "normalized_text",  # re-export: historical home of the normalizer
@@ -96,9 +97,9 @@ def incremental_exact(
     # -> 25 Scan-parquet nodes (the formatted plan reprints the cached
     # relation's build subtree per reference; at runtime the cache
     # fills once, so 5 distinct source scans execute).
-    marked = ids.join(
-        seen.withColumn("_hit", F.lit(True)), fp_col, "left"
-    ).persist()
+    marked = cached(
+        ids.join(seen.withColumn("_hit", F.lit(True)), fp_col, "left")
+    )
     hit_seen = marked.filter(F.col("_hit").isNotNull()).select(id_col)
     fresh = marked.filter(F.col("_hit").isNull()).select(id_col, fp_col)
     keep_min = fresh.groupBy(fp_col).agg(F.min(id_col).alias("_keep_id"))
@@ -226,13 +227,12 @@ def jaccard_pairs(
         # counted.  kept is persisted — sizes and the pair explode both
         # consume it, and it is the post-cut grouped relation (bounded
         # lists), not the raw corpus.
-        kept = (
+        kept = cached(
             shingles(df, text_col, n)
             .select("doc_id", F.xxhash64("shingle").alias("shingle"))
             .groupBy("shingle")
             .agg(F.collect_list("doc_id").alias("ds"))
             .filter(F.size("ds") <= max_df)
-            .persist()
         )
         sizes = (
             kept.select(F.explode("ds").alias("doc_id"))
@@ -256,10 +256,9 @@ def jaccard_pairs(
         # (a grouped list of an uncut hot shingle would concentrate its
         # whole d^2 in one task).  Cache: the sizes agg and both
         # self-join sides read the base relation.
-        sh = (
+        sh = cached(
             shingles(df, text_col, n)
             .select("doc_id", F.xxhash64("shingle").alias("shingle"))
-            .cache()
         )
         sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
         inter = (
@@ -418,7 +417,7 @@ def minhash_near_duplicates(
     cand = minhash_lsh_candidates(df, num_hashes, bands)
     sh = shingles(df).select("doc_id", F.xxhash64("shingle").alias("shingle"))
     if restrict_verification:
-        cand = cand.persist()
+        cand = cached(cand)
         cand_ids = cand.select(
             F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
         ).distinct()
@@ -879,7 +878,7 @@ def simhash_near_duplicates(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     composed with :func:`simhash_verify` (quarter blocking + popcount)."""
     # cache: the signature subplan feeds both sides of the self-join —
     # without this Spark recomputes the grouped-agg twice
-    return simhash_verify(simhash_signatures(df).cache(), max_hamming)
+    return simhash_verify(cached(simhash_signatures(df)), max_hamming)
 
 
 def duplicate_spans(

@@ -38,6 +38,7 @@ from pdfminer_six_spark.ops.textstats import (
     rebalance_for_compute,
     tokens_col,
 )
+from pdfminer_six_spark.spark.session import cached
 
 
 def _bigrams(toks):
@@ -84,9 +85,7 @@ def ngram_lm_scores(
     id_col: str = "doc_id",
     train_mod: int = 10,
     train_keep: int = 8,
-    persist_model: bool = True,
     model: DataFrame | None = None,
-    model_handle: list | None = None,
     carry: dict | None = None,
 ) -> DataFrame:
     """Add-one-smoothed bigram-LM scoring of every document.
@@ -101,14 +100,6 @@ def ngram_lm_scores(
     pred_lang case: one scan computes score inputs AND the language
     vote).  Each carried expression must be functionally determined by
     the document row (it becomes part of the groupBy key).
-
-    Cache lifetime: with ``persist_model=True`` (and no external
-    ``model``) the bigram count table is persisted and stays cached for
-    the session — each DISTINCT input plan is a separate cache entry, so
-    a long-lived session scoring many different inputs accumulates model
-    tables until it ends.  Pass a list as ``model_handle`` to receive the
-    persisted DataFrame and ``unpersist()`` it once the scoring action
-    has run (jobs/score.py does exactly this after its write).
 
     Model slice: documents with ``pmod(id, train_mod) < train_keep`` —
     deterministic, RNG-free, stable under retries/speculation (same
@@ -170,10 +161,8 @@ def ngram_lm_scores(
     # 100 TB and the cached table is bounded by model size, not corpus.
     # (A parquet-materialized `model` is equally re-read per consumer but
     # from a tiny columnar file, so the persist matters less there.)
-    if persist_model and model is None:
-        cb = cb.persist()
-        if model_handle is not None:
-            model_handle.append(cb)
+    if model is None:
+        cb = cached(cb)
     cu = cb.groupBy("w1").agg(F.sum("cb").alias("cu"))
     vocab = cb.select(F.explode(F.array("w1", "w2")).alias("w"))
     # V is a scalar: 1-row broadcast crossJoin (sanctioned pattern, see
@@ -261,9 +250,7 @@ def trigram_lm_scores(
     train_mod: int = 10,
     train_keep: int = 8,
     alpha: float = 0.4,
-    persist_model: bool = True,
     model: DataFrame | None = None,
-    model_handle: list | None = None,
 ) -> DataFrame:
     """Trigram LM scoring with STUPID BACKOFF (Brants et al. 2007 §4 —
     the web-scale scheme: no discounting to normalize, a fixed backoff
@@ -290,10 +277,8 @@ def trigram_lm_scores(
     relation largest-key-first, each level only touching the previous
     level's misses via coalesce on left joins; all enrichment
     (marginals, log-probs) happens on the MODEL-sized table before any
-    corpus join.  The model persists under the same lifetime contract as
-    ngram_lm_scores (pass ``model_handle`` to unpersist after your
-    action; pass ``model=`` a read-back parquet for train-once /
-    score-many)."""
+    corpus join.  The model is not cached; pass ``model=`` a read-back
+    parquet for train-once / score-many."""
     df = rebalance_for_compute(df)  # r06: see ngram_lm_scores
     toks = tokens_col(normalized_text(F.col(text_col)))
     base = df.select(F.col(id_col), _trigrams(toks).alias("tg"))
@@ -302,10 +287,6 @@ def trigram_lm_scores(
         if model is not None
         else trigram_lm_model(df, text_col, id_col, train_mod, train_keep)
     )
-    if persist_model and model is None:
-        c3 = c3.persist()
-        if model_handle is not None:
-            model_handle.append(c3)
 
     ln = F.log
     la = F.log(F.lit(float(alpha)))
@@ -556,8 +537,6 @@ def dsir_weights(
     id_col: str = "doc_id",
     bigrams: bool = True,
     hashed_buckets: int | None = None,
-    persist_model: bool = True,
-    model_handle: list | None = None,
 ) -> DataFrame:
     """Data Selection via Importance Resampling (Xie et al., NeurIPS
     2023): score every raw document by how much more likely its n-gram
@@ -589,10 +568,6 @@ def dsir_weights(
 
     Returns ``(id_col, n_feats, log_w)``; documents with zero features
     drop out (no defined weight — the ngram_lm <2-token precedent).
-    ``persist_model``/``model_handle`` follow the ngram_lm_scores cache
-    contract (the persisted feature-count table is model-sized; a
-    long-lived session scoring many inputs should unpersist via the
-    handle after its action).
     ``log_w`` rounds to 6 decimals: the per-doc sum of logs is
     shuffle-order-dependent in the last ulp (same discipline as
     ngram_lm_scores).
@@ -629,13 +604,9 @@ def dsir_weights(
     # pruned subtrees don't ReuseExchange — unpersisted, each re-scans
     # both corpora's text (measured 5 parquet scans in the plan).  The
     # persisted table is vocab-sized (or k buckets), not corpus-sized —
-    # the ngram_lm_scores precedent, same unpersist contract via
-    # ``model_handle``.  With it the op reads target text once and raw
-    # text twice (model build + scoring).
-    if persist_model:
-        model = model.persist()
-        if model_handle is not None:
-            model_handle.append(model)
+    # the ngram_lm_scores precedent.  With it the op reads target text
+    # once and raw text twice (model build + scoring).
+    model = cached(model)
     scalars = model.agg(
         F.sum("ct").alias("tt"),
         F.sum("cr").alias("tr"),
@@ -684,9 +655,7 @@ def kn_lm_scores(
     discount: float = 0.75,
     train_mod: int = 10,
     train_keep: int = 8,
-    persist_model: bool = True,
     model: DataFrame | None = None,
-    model_handle: list | None = None,
 ) -> DataFrame:
     """Interpolated Kneser-Ney bigram-LM scoring (Kneser & Ney 1995;
     Chen & Goodman 1999 eq. 4.26) — the smoothing family CCNet's KenLM
@@ -707,8 +676,8 @@ def kn_lm_scores(
     Every model relation (cu, n1f, cont, B, V) derives from the ONE
     bigram count table ``cb`` built over the deterministic
     ``pmod(id, train_mod) < train_keep`` slice — same train/score
-    contract, model-table persistence rules (``persist_model`` /
-    ``model_handle`` / external ``model``) and output shape
+    contract, model-table caching (inline only, not an external
+    ``model``) and output shape
     ``(doc_id, n_bigrams, avg_nll, ppl)`` as ngram_lm_scores.
 
     Float determinism: P is one fixed-shape arithmetic expression over
@@ -726,10 +695,8 @@ def kn_lm_scores(
     )
     # same scan-count argument as ngram_lm_scores, with one more
     # consumer: cb feeds the score join + cu + n1f + cont + scalars.
-    if persist_model and model is None:
-        cb = cb.persist()
-        if model_handle is not None:
-            model_handle.append(cb)
+    if model is None:
+        cb = cached(cb)
     cu = cb.groupBy("w1").agg(
         F.sum("cb").alias("cu"), F.count(F.lit(1)).alias("n1f")
     )

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from pdfminer_six_spark.spark.session import cache_scope, cached
+
 # tiny multi-language stopword sets for the n-gram/stopword language heuristic
 STOPWORDS = {
     "en": ["the", "and", "of", "to", "in", "is", "that", "for", "with", "it"],
@@ -716,9 +718,8 @@ def distill_linear_filter(
     ``n_buckets + 1`` groups — map-side-combinable, skew-immune — plus
     a model-sized driver collect per iteration (the sanctioned
     kmeans/bpe pattern; pyspark.ml's linear models do the same via
-    treeAggregate).  The feature relation is persisted for the loop
-    and unpersisted after the final update; the returned scoring plan
-    recomputes it once.
+    treeAggregate).  The feature relation is cached for the loop only;
+    the returned scoring plan recomputes it once.
 
     Returns per-doc training-set scores under the FINAL weights:
     (id_col, label ±1, margin, pred_pos, correct).  ``weights_out``
@@ -765,8 +766,8 @@ def distill_linear_filter(
     bn, bd = beta
     w = [0] * (n_buckets + 1)
     w_prev = list(w)
-    X.persist()
-    try:
+    with cache_scope():
+        X = cached(X)
         cap = (
             X.select(row_sum.alias("_s"), F.posexplode("_x"))
             .groupBy("pos")
@@ -791,8 +792,6 @@ def distill_linear_filter(
                 for j in range(n_buckets + 1)
             ]
             w_prev, w = w, w_new
-    finally:
-        X.unpersist()
     if weights_out is not None:
         weights_out.extend(int(v) for v in w)
     margin = _margin(w)
@@ -1324,8 +1323,6 @@ def source_kl_divergence(
     df: DataFrame,
     group_col: str = "source",
     text_col: str = "text",
-    persist_counts: bool = True,
-    counts_handle: list | None = None,
 ) -> DataFrame:
     """Distribution drift per source: KL(p_source || p_corpus) over
     add-one-smoothed unigram distributions — the corpus-card diagnostic
@@ -1352,12 +1349,9 @@ def source_kl_divergence(
     # cs feeds FOUR consumers (vocab, per-source totals, scalars, the
     # dense term join) whose pruned subtrees don't ReuseExchange —
     # unpersisted the corpus text is scanned 4x (measured in the plan).
-    # The persisted table is (sources x vocab)-sized, not corpus-sized
-    # (ngram_lm_scores precedent; unpersist via ``counts_handle``).
-    if persist_counts:
-        cs = cs.persist()
-        if counts_handle is not None:
-            counts_handle.append(cs)
+    # The cached table is (sources x vocab)-sized, not corpus-sized
+    # (ngram_lm_scores precedent).
+    cs = cached(cs)
     vocab = cs.groupBy("t").agg(F.sum("cs").alias("c"))
     sources = cs.groupBy("src").agg(F.sum("cs").alias("ts"))
     scalars = vocab.agg(

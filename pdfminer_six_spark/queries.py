@@ -18,6 +18,7 @@ from typing import Callable, Dict, Optional, Tuple
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from pdfminer_six_spark.ops import ann, dedup, textstats
+from pdfminer_six_spark.spark.session import cached
 
 QuerySpec = Tuple[Callable[[SparkSession, str], DataFrame], Optional[str]]
 
@@ -2093,10 +2094,11 @@ def q_dup_clusters(spark, sf_dir):
     candidates, exact-Jaccard verification of candidates only, then
     connected components by iterative hash-min label propagation
     (dedup.duplicate_clusters).  The oracle reproduces the closure of the
-    EXACT pair relation with a recursive CTE: it stays green because LSH
-    recall is 1 at this banding (itself oracle-verified by
-    dedup_minhash_lsh) — an iterative Spark algorithm whose fixpoint is
-    still SQL-checkable."""
+    EXACT pair relation with a recursive CTE — an iterative Spark
+    algorithm whose fixpoint is still SQL-checkable.  LSH recall is below
+    1: with 16 hashes in 8 bands a pair at Jaccard J is missed with
+    probability (1 - J^2)^8, 2.8% at J = 0.6.  The oracle equality holds
+    because the test data's near-duplicates sit far above the threshold."""
     pairs = dedup.minhash_near_duplicates(
         _t(spark, sf_dir, "documents"), threshold=0.6
     )
@@ -2878,8 +2880,8 @@ def q_extract_boxes(spark, sf_dir):
     df = spark.createDataFrame(
         transcripts_pandas(n_convs=10, use_reference_samples=False)
     )
-    # single-view consumer: no persist — the returned DataFrame outlives
-    # this function, so a cached union could never be unpersisted here
+    # single-view consumer: no persist — the union is read once, and the
+    # returned DataFrame outlives any cache_scope() this function could open
     return extract_layout_tables(df, persist=False)["boxes"]
 
 
@@ -3712,9 +3714,7 @@ def q_trigram_lm_score(spark, sf_dir):
     float discipline."""
     from pdfminer_six_spark.ops import retrieval
 
-    return retrieval.trigram_lm_scores(
-        _t(spark, sf_dir, "documents"), persist_model=False
-    )
+    return retrieval.trigram_lm_scores(_t(spark, sf_dir, "documents"))
 
 
 _SQL_TRIGRAM_LM = """
@@ -4093,8 +4093,8 @@ def q_dedup_incremental_fuzzy(spark, sf_dir):
     # relation is 16 longs per doc — model-sized, nothing like the
     # shingle-persist anti-pattern minhash_near_duplicates documents.
     # Interleaved best-of-3 A/B at sf0.1 local[32]: 3.50 -> 2.26 s.
-    isig = minhash_signatures(hist).persist()
-    bsig = minhash_signatures(batch).persist()
+    isig = cached(minhash_signatures(hist))
+    bsig = cached(minhash_signatures(batch))
     # keep_sig carries the signature through the banding explode — the
     # old join-back of sig on doc_id was a pure self-join (one row per
     # doc) costing two extra shuffles in the fixture write.

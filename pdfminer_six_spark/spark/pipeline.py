@@ -47,6 +47,8 @@ from pyspark.sql.types import (
     BooleanType,
 )
 
+from pdfminer_six_spark.spark.session import cached
+
 TRANSCRIPTS_SCHEMA = StructType(
     [
         StructField("conv_id", StringType()),
@@ -555,10 +557,9 @@ def extract_layout_tables(
     tagged union is cached so the three filtered views share the one kernel
     run; PDF parsing is the dominant cost, so this is 3× cheaper than a
     kernel run per relation (VERDICT r01 'what's wrong' #5).  Callers that
-    consume the views should ``unpersist()`` the returned ``_union`` when
-    done; callers consuming a SINGLE view should pass ``persist=False`` —
-    caching a relation read once is pure overhead, and a handed-off
-    DataFrame outlives the caller's chance to unpersist (ADVICE r02).
+    consume the views should read them inside a ``cache_scope()``, which
+    releases the union on exit; callers consuming a SINGLE view should
+    pass ``persist=False`` — caching a relation read once is pure overhead.
     """
 
     def run_union(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -652,7 +653,7 @@ def extract_layout_tables(
     src = df.select("conv_id", "turn_idx", "text", "tool")
     union = src.mapInPandas(run_union, schema=LAYOUT_UNION_SCHEMA)
     if persist:
-        union = union.persist()
+        union = cached(union)
     common = ["conv_id", "turn_idx", "page_id"]
     chars = union.filter(F.col("relation") == "char").select(
         *common,
@@ -671,7 +672,7 @@ def extract_layout_tables(
         F.col("id2").alias("box_index"),
         "x0", "y0", "x1", "y1", "wmode", "text",
     ).select([f.name for f in BOXES_SCHEMA.fields])
-    return {"chars": chars, "lines": lines, "boxes": boxes, "_union": union}
+    return {"chars": chars, "lines": lines, "boxes": boxes}
 
 
 def lineage_metrics(extracted: DataFrame) -> DataFrame:

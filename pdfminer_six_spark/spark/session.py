@@ -10,8 +10,37 @@ the local harness (cluster deploys override via spark-submit --conf).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from contextvars import ContextVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+_scope: ContextVar[list | None] = ContextVar("cache_scope", default=None)
+
+
+def cached(df: DataFrame) -> DataFrame:
+    """``df.persist()``, released when the innermost open
+    :func:`cache_scope` exits, normally or by exception — so the actions
+    that read it must run inside that scope.  With no scope open it lives
+    until the session ends or ``clearCache()`` runs."""
+    held = _scope.get()
+    if held is not None:
+        held.append(df)
+    return df.persist()
+
+
+@contextmanager
+def cache_scope():
+    """The lifetime owner :func:`cached` names; nests, and also works as
+    a ``@cache_scope()`` decorator."""
+    held: list = []
+    token = _scope.set(held)
+    try:
+        yield
+    finally:
+        _scope.reset(token)
+        for df in held:
+            df.unpersist()
 
 
 def build_session(

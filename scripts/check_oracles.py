@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness harness: run every queries()
 entry on Spark and its oracle_sql() on DuckDB at a given sf, compare
-row-count + schema-ish + order-insensitive value hash.
+row-count + schema-ish + order-insensitive value hash (printed per query, to
+diff two checkouts).  Each query runs inside cache_scope().
 
 Usage: python scripts/check_oracles.py [sf_dir] [name ...]
 """
@@ -62,7 +63,7 @@ def table_hash(pdf):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    from pdfminer_six_spark.spark.session import build_session
+    from pdfminer_six_spark.spark.session import build_session, cache_scope
 
     spark = build_session(app_name="oracle-check", master="local[8]")
     con = duckdb.connect()
@@ -79,9 +80,8 @@ def main():
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
-            cols = sdf.columns
-            spdf = sdf.toPandas()
+            with cache_scope():
+                spdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
             print(f"FAIL  {name}: spark error {type(e).__name__}: {e}")
             n_fail += 1
@@ -97,7 +97,8 @@ def main():
                       f"{type(e).__name__}: {e}")
                 n_fail += 1
                 continue
-            print(f"rows  {name}: {len(spdf)} rows ({time.time()-t0:.1f}s)")
+            print(f"rows  {name}: {len(spdf)} rows hash={table_hash(spdf)} "
+                  f"({time.time()-t0:.1f}s)")
             n_rowsonly += 1
             continue
         try:
@@ -116,7 +117,8 @@ def main():
             n_fail += 1
             continue
         if ok_count and ok_cols and ok_hash:
-            print(f"PASS  {name}: {len(spdf)} rows ({time.time()-t0:.1f}s)")
+            print(f"PASS  {name}: {len(spdf)} rows hash={table_hash(spdf)} "
+                  f"({time.time()-t0:.1f}s)")
             n_pass += 1
         else:
             print(

@@ -577,6 +577,7 @@ def test_index_job_artifacts_consumable_and_resume(spark, tmp_path):
         minhash_signatures,
     )
     from pdfminer_six_spark.ops.retrieval import ngram_lm_scores
+    from pdfminer_six_spark.spark.session import cache_scope
 
     # artifact 1: fingerprint index drives incremental exact dedup
     batch = docs.withColumn("doc_id", F.col("doc_id") + 100000)
@@ -603,10 +604,11 @@ def test_index_job_artifacts_consumable_and_resume(spark, tmp_path):
 
     # artifact 3: LM model table scores identically to the inline path
     model = spark.read.parquet(str(wd / "04_lm"))
-    via_model = ngram_lm_scores(docs, model=model, persist_model=False)
-    inline = ngram_lm_scores(docs, persist_model=False)
-    assert via_model.exceptAll(inline).count() == 0
-    assert inline.exceptAll(via_model).count() == 0
+    with cache_scope():
+        via_model = ngram_lm_scores(docs, model=model)
+        inline = ngram_lm_scores(docs)
+        assert via_model.exceptAll(inline).count() == 0
+        assert inline.exceptAll(via_model).count() == 0
 
     # artifact 4: k-means assignment equals a fresh fixed-point run
     km_idx = {

@@ -3172,6 +3172,7 @@ def test_trigram_lm_model_roundtrip_and_backoff_floor(spark, tmp_path):
         trigram_lm_model,
         trigram_lm_scores,
     )
+    from pdfminer_six_spark.spark.session import cache_scope
 
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
@@ -3179,22 +3180,20 @@ def test_trigram_lm_model_roundtrip_and_backoff_floor(spark, tmp_path):
 
     mp = str(tmp_path / "c3")
     trigram_lm_model(docs).write.parquet(mp)
-    via_model = trigram_lm_scores(
-        docs, model=spark.read.parquet(mp), persist_model=False
-    )
-    inline = trigram_lm_scores(docs, persist_model=False)
-    assert via_model.exceptAll(inline).count() == 0
-    assert inline.exceptAll(via_model).count() == 0
+    with cache_scope():
+        via_model = trigram_lm_scores(docs, model=spark.read.parquet(mp))
+        inline = trigram_lm_scores(docs)
+        assert via_model.exceptAll(inline).count() == 0
+        assert inline.exceptAll(via_model).count() == 0
 
     # floor: append one doc of never-seen tokens; every trigram position
     # takes the default coalesce branch
     unseen = spark.createDataFrame(
         [(999999, "zzqx1 zzqx2 zzqx3 zzqx4")], "doc_id long, text string"
     )
-    scored = trigram_lm_scores(
-        docs.unionByName(unseen), persist_model=False
-    )
-    row = scored.filter(F.col("doc_id") == 999999).collect()[0]
+    with cache_scope():
+        scored = trigram_lm_scores(docs.unionByName(unseen))
+        row = scored.filter(F.col("doc_id") == 999999).collect()[0]
     c3 = trigram_lm_model(docs)
     t_total = c3.agg(F.sum("c3")).collect()[0][0]
     v = c3.select("w3").distinct().count()
@@ -3609,3 +3608,58 @@ def test_kn_lm_scores_equals_python_replica(spark):
         assert abs(got[i]["ppl"] - round(math.exp(nll), 6)) < 2e-5
     # sanity: the in-model docs score lower perplexity than the held-out
     assert got[8]["ppl"] > max(got[i]["ppl"] for i in train)
+
+
+def test_cache_scope_releases_every_op_persist(spark):
+    """Ops composed in one long-lived session leave no cached relation
+    behind once their cache_scope() exits — over distinct batches, and
+    when the scope exits by exception."""
+    from pyspark.sql import functions as F
+
+    from pdfminer_six_spark.ops import ann, clean, dedup, retrieval, textstats
+    from pdfminer_six_spark.spark.session import cache_scope
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return jsc.getPersistentRDDs().size()
+
+    def run_ops(batch, seen, vecs):
+        en = batch.filter(F.col("lang") == "en")
+        for out in (
+            dedup.incremental_exact(batch, seen),
+            dedup.jaccard_pairs(batch, max_df=50),
+            dedup.minhash_near_duplicates(batch, restrict_verification=True),
+            dedup.simhash_near_duplicates(batch),
+            retrieval.ngram_lm_scores(batch),
+            retrieval.kn_lm_scores(batch),
+            retrieval.dsir_weights(batch, en),
+            textstats.source_kl_divergence(batch),
+            ann.kmeans_fixed_point(vecs, k=4, n_iters=2),
+            clean.train_order(batch, mode="sharded"),
+        ):
+            out.count()
+
+    for b in range(3):
+        batch = docs.filter(F.col("doc_id") % 3 == b)
+        seen = docs.filter(F.col("doc_id") % 3 != b).select(
+            F.md5(dedup.normalized_text(F.col("text"))).alias("fp")
+        )
+        before = persisted()
+        with cache_scope():
+            run_ops(batch, seen, emb.filter(F.col("vec_id") % 3 == b))
+            # the scope really holds the ops' caches while open: nine, as
+            # kn_lm_scores reuses ngram_lm_scores' cached bigram model
+            assert persisted() - before >= 9
+        assert persisted() == before, b
+
+    before = persisted()
+    with pytest.raises(RuntimeError, match="mid-scope"):
+        with cache_scope():
+            seen = docs.select(F.lit("x").alias("fp"))
+            dedup.incremental_exact(docs, seen).count()
+            assert persisted() > before
+            raise RuntimeError("mid-scope")
+    assert persisted() == before

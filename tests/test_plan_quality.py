@@ -153,18 +153,17 @@ def test_layout_tables_single_kernel_pass(spark):
     union — exactly one MapInPandas subtree, no per-relation kernel."""
     from pdfminer_six_spark.datagen.transcripts import transcripts_pandas
     from pdfminer_six_spark.spark.pipeline import extract_layout_tables
+    from pdfminer_six_spark.spark.session import cache_scope
 
     df = spark.createDataFrame(
         transcripts_pandas(n_convs=2, use_reference_samples=False)
     )
-    t = extract_layout_tables(df)
-    try:
+    with cache_scope():
+        t = extract_layout_tables(df)
         for rel in ("chars", "lines", "boxes"):
             plan = _plan(t[rel])
             assert "InMemoryTableScan" in plan, rel
             assert plan.count("MapInPandas") <= 1, rel
-    finally:
-        t["_union"].unpersist()
 
 
 def test_asof_join_single_shuffle(spark):

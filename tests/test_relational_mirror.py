@@ -22,16 +22,14 @@ def spark():
 def tables(spark):
     from pdfminer_six_spark.datagen.transcripts import transcripts_pandas
     from pdfminer_six_spark.spark.pipeline import extract_layout_tables
+    from pdfminer_six_spark.spark.session import cache_scope
 
     df = spark.createDataFrame(
         transcripts_pandas(n_convs=12, use_reference_samples=True)
     )
-    t = extract_layout_tables(df)
-    return {
-        "chars": t["chars"].toPandas(),
-        "lines": t["lines"].toPandas(),
-        "boxes": t["boxes"].toPandas(),
-    }
+    with cache_scope():
+        t = extract_layout_tables(df)
+        return {rel: t[rel].toPandas() for rel in ("chars", "lines", "boxes")}
 
 
 def test_window_line_grouping_equals_kernel(spark, tables):
